@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.Tables
+import graft.ops.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -108,7 +109,7 @@ object Pipeline {
       .join(movies.select(col("p_partkey"), col("imdb_score"), col("op")), "p_partkey")
       .select(col("p_partkey"), col("role"), col("name"), col("name_id"),
         col("imdb_score"), col("op"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     merged.unpersist(false)
     out
   }

@@ -82,7 +82,7 @@ object Bpe {
                            rounds: Int, minPairCount: Long = 1L,
                            vocabTarget: Int = 0): (DataFrame, DataFrame) = {
     require(rounds >= 1, "merge rounds must be positive")
-    var words = initialWords(spark, dir).localCheckpoint(true)
+    var words = Materialize(initialWords(spark, dir))
     // exact vocab tracking: the alphabet is charset-bounded (here [a-z],
     // ≤ a few hundred in general) so collecting it is metadata-sized
     val vocab: scala.collection.mutable.Set[String] =
@@ -110,7 +110,7 @@ object Bpe {
       val best = pairs.orderBy(desc("c"), asc("lhs"), asc("rhs")).limit(1)
         .select(lit(r.toLong).as("step"), col("lhs"), col("rhs"),
           concat(col("lhs"), col("rhs")).as("merged"), col("c").as("cnt"))
-        .localCheckpoint(true)
+        .transform(Materialize)
       // threshold stop: the checkpointed winner is 1 row — reading it
       // is free; a sub-threshold best ends training BEFORE this merge
       if (minPairCount > 1L &&
@@ -131,7 +131,7 @@ object Bpe {
             |  coalesce(concat('<', lhs, '><', rhs, '>'), '<<'),
             |  coalesce(concat('<', merged, '>'), ''))""".stripMargin).as("rep"),
           col("cnt"))
-        .localCheckpoint(true)
+        .transform(Materialize)
       }
     }
     val ms = merges.result()

@@ -17,12 +17,9 @@ import org.apache.spark.storage.StorageLevel
   * rounds — fine for near-clique dup clusters, pathological on chains),
   * star contraction halves path heights every round and converges in
   * O(log² n) rounds on ANY graph shape (ClustersSpec pins a length-64
-  * path converging in ≤ 8 rounds). Per-round lineage is truncated with
-  * localCheckpoint — without it every iteration re-plans the full
-  * upstream DAG (the edge input can be an entire near-dup job); the
-  * `checkpointer` argument swaps in reliable checkpoint() for
-  * fault-tolerant cluster runs, since a local checkpoint cannot be
-  * recomputed after executor loss.
+  * path converging in ≤ 8 rounds). Per-round lineage is truncated
+  * through [[Materialize]] — without it every iteration re-plans the
+  * full upstream DAG (the edge input can be an entire near-dup job).
   */
 object Clusters {
 
@@ -54,38 +51,17 @@ object Clusters {
 
   /** Connected components of an undirected edge list `(a_id, b_id)`:
     * returns ((node, comp) rows, rounds-to-converge) where comp = min
-    * node id in the component.
-    *
-    * `checkpointer` is the per-round lineage-truncation strategy: the
-    * default eager `localCheckpoint` is right for a single-app run
-    * (blocks live on the executors that computed them), but cannot be
-    * recomputed after executor loss — fault-tolerant cluster runs pass
-    * `_.checkpoint(true)` (with `sparkContext.setCheckpointDir` on
-    * reliable storage) and pay one HDFS write per round for it.
-    * It MUST be EAGER: the fixpoint signature rides the materializing
-    * job as `observe` metrics and blocks on `Observation.get` right
-    * after — a lazy checkpointer (`localCheckpoint(false)`, `identity`)
-    * deadlocks here instead of merely running slow (ADVICE r21; the
-    * same contract as `Graph.hits`). */
-  def connectedComponentsWithRounds(edges: DataFrame, maxRounds: Int = 64,
-      checkpointer: DataFrame => DataFrame = _.localCheckpoint(true)): (DataFrame, Int) = {
+    * node id in the component. */
+  def connectedComponentsWithRounds(edges: DataFrame, maxRounds: Int = 64): (DataFrame, Int) = {
     // fixpoint signature (size + two order-independent checksums) rides
     // the checkpoint materialization as an `observe` metric — the job
     // that truncates lineage also yields the signature, so a round costs
     // ONE scan of the edge set, not two. A signature match is CONFIRMED
     // with an exact except() before the loop exits, so a checksum
     // collision can only cost one extra round, never a wrong answer.
-    def checkpointWithSig(df: DataFrame): (DataFrame, (Long, Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val withObs = df.observe(obs,
-        count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("huv"),
-        coalesce(bit_xor(xxhash64(col("v"), col("u"))), lit(0L)).as("hvu"))
-      val out = checkpointer(withObs) // eager — fires the observation
-      val m = obs.get
-      (out, (m("n").asInstanceOf[Long], m("huv").asInstanceOf[Long],
-        m("hvu").asInstanceOf[Long]))
-    }
+    val sigAggs = Seq(count(lit(1)).as("n"),
+      coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("huv"),
+      coalesce(bit_xor(xxhash64(col("v"), col("u"))), lit(0L)).as("hvu"))
     // materialize the INPUT once (r22): the canonical edge set AND the
     // labeling's singleton restoration below both consume `edges`, and a
     // LAZY caller pipeline (q155's IVF pair stage under q159, q139's
@@ -93,19 +69,19 @@ object Clusters {
     // pair-stage runs per apply query. One pair-sliver checkpoint makes
     // the caller's pipeline run exactly once; eager callers (the
     // jaccard family) pay one cheap sliver re-write.
-    val in = checkpointer(edges.select(col("a_id"), col("b_id")))
-    var (e, sig) = checkpointWithSig(in
+    val in = Materialize(edges.select(col("a_id"), col("b_id")))
+    var (e, sig) = Materialize.withMetrics(in
       .select(least(col("a_id"), col("b_id")).as("u"),
         greatest(col("a_id"), col("b_id")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct())
+      .distinct())(sigAggs: _*)
     var rounds = 0
-    var converged = sig._1 == 0L // empty edge set is already a fixpoint
+    var converged = sig("n") == 0L // empty edge set is already a fixpoint
     while (!converged && rounds < maxRounds) {
       // smallStar scans the large-star result twice (mins + re-join), but
       // Catalyst reuses the shuffle exchange — only `next` needs the
       // lineage-truncating checkpoint
-      val (next, nextSig) = checkpointWithSig(smallStar(largeStar(e)))
+      val (next, nextSig) = Materialize.withMetrics(smallStar(largeStar(e)))(sigAggs: _*)
       rounds += 1
       converged = nextSig == sig && next.except(e).isEmpty
       sig = nextSig
@@ -132,9 +108,8 @@ object Clusters {
   }
 
   /** Interface kept from the min-label round-2 version. */
-  def connectedComponents(edges: DataFrame,
-      checkpointer: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame =
-    connectedComponentsWithRounds(edges, checkpointer = checkpointer)._1
+  def connectedComponents(edges: DataFrame): DataFrame =
+    connectedComponentsWithRounds(edges)._1
 
   /** q54: cluster the exact-jaccard near-dup pairs and emit one row per
     * member with its canonical representative (min doc_id of the

@@ -110,18 +110,16 @@ object Dedup {
     // observe metric (r22, the q176/CC literal-re-entry idiom; an exact
     // integer sum is order-free) — no second agg job + 1-row
     // BroadcastExchange over the sliver the checkpoint just wrote
-    val obs = org.apache.spark.sql.Observation()
-    val pairs = minhashLsh(spark, dir).select(col("a_id"), col("b_id"))
+    val (pairs, m) = Materialize.withMetrics(minhashLsh(spark, dir).select(col("a_id"), col("b_id"))
       .join(src.select(col("doc_id").as("a_id"), col("source").as("sa")), "a_id")
       .join(src.select(col("doc_id").as("b_id"), col("source").as("sb")), "b_id")
       .select(least(col("sa"), col("sb")).as("src_a"),
         greatest(col("sa"), col("sb")).as("src_b"))
-      .groupBy(col("src_a"), col("src_b")).agg(count(lit(1)).as("n_pairs"))
-      .observe(obs, sum(col("n_pairs")).as("t"))
-      .localCheckpoint(true)
+      .groupBy(col("src_a"), col("src_b")).agg(count(lit(1)).as("n_pairs")))(
+      sum(col("n_pairs")).as("t"))
     // null only on an EMPTY matrix, where the select below emits no rows
     // for any literal — 1L keeps the division total
-    val t = Option(obs.get.apply("t")).fold(1L)(_.asInstanceOf[Long])
+    val t = Option(m("t")).fold(1L)(_.asInstanceOf[Long])
     pairs.select(col("src_a"), col("src_b"), col("n_pairs"),
       round(col("n_pairs").cast("double") / lit(t), 6).as("share"))
   }
@@ -219,13 +217,11 @@ object Dedup {
       // metric (the q176/CC literal-re-entry idiom; count is order-free
       // exact) — no second agg + broadcast crossJoin over the sliver
       // the checkpoint just wrote
-      val obs = org.apache.spark.sql.Observation()
-      val pairs = pairs0.select(col("a_id"), col("b_id"))
-        .observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      val nPairs = obs.get.apply("n").asInstanceOf[Long]
+      val (pairs, m) = Materialize.withMetrics(pairs0.select(col("a_id"), col("b_id")))(
+        count(lit(1)).as("n"))
       pairs.join(truth, Seq("a_id", "b_id"), "left_semi")
         .agg(count(lit(1)).as("n_hit"))
-        .select(lit(name).as("method"), lit(nPairs).as("n_pairs"), col("n_hit"))
+        .select(lit(name).as("method"), lit(m("n")).as("n_pairs"), col("n_hit"))
     }
     // degenerate-denominator guard: a sampled audit (q188) can leave a
     // leg with zero pairs; Spark's double 0/0 is NaN while the oracle
@@ -237,7 +233,7 @@ object Dedup {
           round(col("n_hit").cast("double") / col("n_pairs"), 6)).as("prec"),
         when(lit(nTrue) > 0,
           round(col("n_hit").cast("double") / lit(nTrue), 6)).as("rec"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     truth.unpersist(false)
     sh.unpersist(false)
     toks.unpersist(false)
@@ -264,7 +260,7 @@ object Dedup {
     // materialize the (small) candidate pair set once — it feeds the join
     // AND the filter-first doc restriction below, and for q22 it hangs off
     // an expensive prefix self-join we must not replay per branch
-    val pairs = cand.localCheckpoint(true)
+    val pairs = Materialize(cand)
     // filter-first: only docs that appear in some candidate pair need
     // their sorted hash array. Candidate docs are a small fraction of the
     // corpus (near-dup rate, not corpus size), so the collect_list
@@ -312,7 +308,7 @@ object Dedup {
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), col("jaccard"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     arrays.unpersist(false)
     out
   }
@@ -479,7 +475,7 @@ object Dedup {
         expr("sorted_intersect_count(arr_a, arr_b)").cast("double") / col("sz_a"))
       .filter(col("containment") >= threshold)
       .select(col("a_id"), col("b_id"), col("containment"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     arrays.unpersist(false)
     out
   }
@@ -800,7 +796,7 @@ object Dedup {
       .select(col("p.a_id"), col("p.b_id"), lit(0).cast("int").as("hamming"))
     // materialize the pair set eagerly, then release the signature-group
     // cache — same leak-free lifecycle as the jaccard family
-    val out = cross.unionByName(within).localCheckpoint(true)
+    val out = Materialize(cross.unionByName(within))
     groups.unpersist(false)
     out
   }

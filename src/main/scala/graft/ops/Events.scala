@@ -134,13 +134,13 @@ object Events {
     // checkpoint per REUSED stage makes each filtered scan run once;
     // s4 feeds only the union and stays lazy.
     val s1 = stage("signup").groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     val s2 = stage("view").join(s1, "user_id").filter(col("ts") > col("t1"))
       .groupBy(col("user_id")).agg(min(col("ts")).as("t2"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     val s3 = stage("click").join(s2, "user_id").filter(col("ts") > col("t2"))
       .groupBy(col("user_id")).agg(min(col("ts")).as("t3"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     val s4 = stage("purchase").join(s3, "user_id").filter(col("ts") > col("t3"))
       .groupBy(col("user_id")).agg(min(col("ts")).as("t4"))
     s1.select(lit("1_signup").as("stage"), col("user_id"))

@@ -35,9 +35,8 @@ object Graph {
     * (node, rank, n) with Σ rank = 1. The `n` column carries the node
     * count so callers can normalize without a second pass. */
   private[graft] def rankTable(edges: DataFrame, iters: Int,
-                               damping: Double, ckptEvery: Int = 3,
-                               checkpointer: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
-    require(iters >= 1 && damping > 0 && damping < 1 && ckptEvery >= 1)
+                               damping: Double): DataFrame = {
+    require(iters >= 1 && damping > 0 && damping < 1)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // one degree-annotated edge list feeds every iteration — persist it,
     // release once the (node-count-sized) rank table is materialized
@@ -51,23 +50,25 @@ object Graph {
     for (i <- 1 to iters) {
       ranks = iterate(ed, ranks, damping)
       // lineage truncation (the Clusters.scala pattern), BATCHED every
-      // `ckptEvery` rounds (default 3): an eager checkpoint is a full
+      // `RankCkptEvery` rounds: an eager checkpoint is a full
       // job, and on a real cluster every job pays scheduler latency, so
       // letting a few rounds compose into one job cuts the job count
-      // ~ckptEvery× while plans stay shallow enough that analysis cost
+      // ~RankCkptEvery× while plans stay shallow enough that analysis cost
       // never compounds (a monolithic iters-deep tree would). Local A/B
       // at sf0.1 measures 1 vs 3 vs 5 within run-to-run noise — the
       // per-iteration cost there is the shuffle, not the checkpoint —
-      // so the knob is a cluster-latency lever, not a local one.
+      // so the batch is a cluster-latency lever, not a local one.
       // Retained blocks are node-count-sized rank vectors, ~MBs even at
-      // web scale; the `checkpointer` argument swaps in reliable
-      // checkpoint() on a fault-tolerant cluster.
-      if (i % ckptEvery == 0 && i < iters) ranks = checkpointer(ranks)
+      // web scale; `Materialize` picks reliable vs local.
+      if (i % RankCkptEvery == 0 && i < iters) ranks = Materialize(ranks)
     }
-    val out = checkpointer(ranks)
+    val out = Materialize(ranks)
     ed.unpersist(false)
     out
   }
+
+  /** Power-iteration rounds per [[rankTable]] checkpoint. */
+  private val RankCkptEvery = 3
 
   /** One power iteration: shuffle the contribution stream on dst, partial
     * sums map-side. The node count rides along as a constant COLUMN of
@@ -88,16 +89,14 @@ object Graph {
 
   /** q97: damped PageRank, top-50 nodes. */
   def pageRank(spark: SparkSession, dir: String,
-               iters: Int = 10, damping: Double = 0.85,
-               ckptEvery: Int = 3,
-               checkpointer: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+               iters: Int = 10, damping: Double = 0.85): DataFrame = {
     // o_orderkey is the table's unique key, so each row already yields a
     // distinct (order, customer) pair — no dedup shuffle needed before
     // the iteration loop (the oracle's DISTINCT is equally a no-op)
     val ord = Tables.orders(spark, dir)
       .select((col("o_orderkey") * 2).as("src"), (col("o_custkey") * 2 + 1).as("dst"))
     val edges = ord.union(ord.select(col("dst").as("src"), col("src").as("dst")))
-    rankTable(edges, iters, damping, ckptEvery, checkpointer)
+    rankTable(edges, iters, damping)
       .select(
         when(col("node") % 2 === 0, "order").otherwise("customer").as("kind"),
         expr("node div 2").as("key"),
@@ -172,17 +171,8 @@ object Graph {
     * Oracle design = q97's: the same [[HitsIters]] rounds unrolled as
     * chained CTEs with the identical per-round snap expression; the
     * read-out normalizes once per side (score/Σ × n, O(1) values)
-    * rounded at 5 dp with ties cut on node id.
-    *
-    * `checkpointer` MUST be EAGER (run an action that materializes the
-    * frame, like the default `localCheckpoint(true)`): each round's snap
-    * and the read-out ride the materializing job as `observe` metrics
-    * and block on `Observation.get` immediately after — a lazy
-    * checkpointer (`localCheckpoint(false)`, `identity`) deadlocks here
-    * instead of merely running slow (ADVICE r21). Same contract as
-    * `Clusters.connectedComponentsWithRounds`. */
-  def hits(spark: SparkSession, dir: String,
-           checkpointer: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+    * rounded at 5 dp with ties cut on node id. */
+  def hits(spark: SparkSession, dir: String): DataFrame = {
     val edges = Tables.lineitem(spark, dir)
       .select((col("l_orderkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
       .distinct()
@@ -202,15 +192,14 @@ object Graph {
     // ints ≤ d_auth·2^30 (exact through degree product 2^23) — the
     // auth frame never needs its own snap pass.
     def snap(raw: DataFrame): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val ckpt = checkpointer(raw.observe(obs, max(col("s")).as("mx")))
+      val (ckpt, m) = Materialize.withMetrics(raw)(max(col("s")).as("mx"))
       // max is null only on an EMPTY frame (no edges), where the select
       // below is empty for any finite literal — 1.0 keeps the cast total
-      val mx = Option(obs.get.apply("mx")).fold(1.0)(_.asInstanceOf[Double])
+      val mx = Option(m("mx")).fold(1.0)(_.asInstanceOf[Double])
       ckpt.select(col("node"),
         round(col("s") / lit(mx) * lit(HitsSnapScale), 0).as("s"))
     }
-    var hubs = checkpointer(edges.select(col("src").as("node")).distinct()
+    var hubs = Materialize(edges.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1.0).as("s")))
     var auths: DataFrame = null
     for (i <- 1 to HitsIters) {
@@ -221,7 +210,7 @@ object Graph {
       // checkpoint re-ran the full edges⋈hubs shuffle+agg a second time.
       // One node-sliver checkpoint makes the edge-scale subtree execute
       // once (pure materialization barrier: values unchanged).
-      if (i == HitsIters) auths = checkpointer(auths)
+      if (i == HitsIters) auths = Materialize(auths)
       hubs = snap(edges.join(auths, edges("dst") === auths("node"))
         .groupBy(col("src").as("node")).agg(sum(col("s")).as("s")))
     }
@@ -231,10 +220,8 @@ object Graph {
     // grid integers, so the sum is order-free) instead of a second agg +
     // broadcast crossJoin — same literal-re-entry trade as snap().
     def head(scores0: DataFrame, kind: String): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val scores = checkpointer(scores0.observe(obs,
-        sum(col("s")).as("t"), count(lit(1)).as("n")))
-      val m = obs.get
+      val (scores, m) = Materialize.withMetrics(scores0)(
+        sum(col("s")).as("t"), count(lit(1)).as("n"))
       val t = Option(m("t")).fold(1.0)(_.asInstanceOf[Double])
       val n = m("n").asInstanceOf[Long]
       scores.select(lit(kind).as("kind"), expr("node div 2").as("key"),
@@ -242,7 +229,7 @@ object Graph {
         .orderBy(desc("score"), asc("node")).limit(25)
         .select(col("kind"), col("key"), col("score"))
     }
-    val out = head(hubs, "order").unionAll(head(auths, "part")).localCheckpoint(true)
+    val out = Materialize(head(hubs, "order").unionAll(head(auths, "part")))
     edges.unpersist(false)
     out
   }
@@ -268,20 +255,17 @@ object Graph {
     // separate agg job + 1-row broadcast over each checkpoint it had
     // just written, including a full re-scan of the wedge set (the
     // dominant O(Σ deg²) intermediate)
-    def ckptWithCount(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      (out, obs.get.apply("n").asInstanceOf[Long])
-    }
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), (col("l_partkey") % 100).as("cat"))
       .distinct()
-    val (und, nEdges) = ckptWithCount(items.as("a").join(items.as("b"), Seq("l_orderkey"))
+    // the edge set feeds degrees, orientation, and the edge count
+    val (und, edgeStats) = Materialize.withMetrics(items.as("a")
+      .join(items.as("b"), Seq("l_orderkey"))
       .filter(col("a.cat") < col("b.cat"))
       .groupBy(col("a.cat").as("u"), col("b.cat").as("v"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= minSupport)
-      .select(col("u"), col("v"))) // feeds degrees, orientation, and the edge count
+      .select(col("u"), col("v")))(count(lit(1)).as("n"))
     val deg = und.select(col("u").as("node")).unionAll(und.select(col("v")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
     // orient low→high in the (degree, node) total order
@@ -293,23 +277,23 @@ object Graph {
         struct(col("u").as("src"), col("v").as("dst")))
         .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(true) // feeds the wedge self-join AND the closer
+      .transform(Materialize) // feeds the wedge self-join AND the closer
     val degOf = deg // (node, d) — for ordering wedge endpoints
-    val (wedges, nWedges) = ckptWithCount(oe.as("x").join(oe.as("y"), Seq("src"))
+    val (wedges, wedgeStats) = Materialize.withMetrics(oe.as("x").join(oe.as("y"), Seq("src"))
       .join(degOf.select(col("node").as("xd_node"), col("d").as("xd")),
         col("x.dst") === col("xd_node"))
       .join(degOf.select(col("node").as("yd_node"), col("d").as("yd")),
         col("y.dst") === col("yd_node"))
       .filter(col("xd") < col("yd") ||
         (col("xd") === col("yd") && col("x.dst") < col("y.dst")))
-      .select(col("x.dst").as("wu"), col("y.dst").as("wv")))
+      .select(col("x.dst").as("wu"), col("y.dst").as("wv")))(count(lit(1)).as("n"))
       // the wedge set — the dominant O(Σ deg²) intermediate — feeds its
       // own count AND the closing semi-join; materialized once, counted
       // by the materializing job itself
     val tri = wedges.join(oe,
       col("wu") === col("src") && col("wv") === col("dst"), "left_semi")
     tri.agg(count(lit(1)).as("n_triangles"))
-      .select(lit(nEdges).as("n_edges"), lit(nWedges).as("n_wedges"),
+      .select(lit(edgeStats("n")).as("n_edges"), lit(wedgeStats("n")).as("n_wedges"),
         col("n_triangles"))
   }
 

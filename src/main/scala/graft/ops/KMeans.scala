@@ -48,7 +48,7 @@ object KMeans {
     var cs = initCentroids(v, k)
     for (_ <- 1 to iters)
       // K-row frame: eager checkpoint keeps each round's plan shallow
-      cs = update(assign(v, cs)).localCheckpoint(true)
+      cs = Materialize(update(assign(v, cs)))
     assign(v, cs)
   }
 
@@ -72,7 +72,7 @@ object KMeans {
     require(k >= 1 && iters >= 0 && nprobe >= 1)
     var cs = group(initCentroids(v, k))
     for (_ <- 1 to iters)
-      cs = group(update(assignIvf(v, cs, nprobe))).localCheckpoint(true)
+      cs = Materialize(group(update(assignIvf(v, cs, nprobe))))
     assignIvf(v, cs, nprobe)
   }
 

@@ -166,7 +166,7 @@ object Scoring {
       split(col("bg"), " ").getItem(0).as("u"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val cnt = big.groupBy(col("bg")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // vocab²-bounded; feeds the join AND the margin
+      .transform(Materialize) // vocab²-bounded; feeds the join AND the margin
     val uc = cnt.select(split(col("bg"), " ").getItem(0).as("u"), col("c"))
       .groupBy(col("u")).agg(sum(col("c")).as("cu"))
     val vocab = toksOf(spark, dir).agg(count_distinct(col("tok")).as("v"))
@@ -175,7 +175,7 @@ object Scoring {
       .crossJoin(broadcast(vocab))
       .groupBy(col("doc_id"), col("lang"))
       .agg(round(avg(-log((col("c") + lit(1.0)) / (col("cu") + col("v")))), 6).as("xent"))
-      .localCheckpoint(true) // one row per scored doc; feeds four consumers
+      .transform(Materialize) // one row per scored doc; feeds four consumers
     big.unpersist(false)
     val bounds = xent.groupBy(col("lang"))
       .agg(min(col("xent")).as("lo"), max(col("xent")).as("hi"), count(lit(1)).as("n"))
@@ -185,7 +185,7 @@ object Scoring {
           .otherwise(floor((col("xent") - col("lo")) / (col("hi") - col("lo")) * buckets)),
         lit((buckets - 1).toDouble)).cast("int"))
       .select(col("lang"), col("xent"), col("b"))
-      .localCheckpoint(true) // feeds the tercile counts AND the final rollup
+      .transform(Materialize) // feeds the tercile counts AND the final rollup
     val counts = bucketed.groupBy(col("lang"), col("b")).agg(count(lit(1)).as("cnt"))
     // the window runs over ≤ langs × buckets COUNT rows, never docs
     val cum = counts.withColumn("cum",
@@ -372,12 +372,9 @@ object Scoring {
     // integer arithmetic) and the two totals are its margins, riding the
     // ≤`buckets`-row checkpoint as observe metrics. The corpus explode
     // now runs twice (model build + scoring join) instead of four times.
-    val obs = org.apache.spark.sql.Observation()
-    val fc = feat.groupBy(col("f")).agg(count(lit(1)).as("cr"),
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct"))
-      .observe(obs, sum(col("ct")).as("nt"), sum(col("cr")).as("nr"))
-      .localCheckpoint(true)
-    val m = obs.get
+    val (fc, m) = Materialize.withMetrics(feat.groupBy(col("f")).agg(count(lit(1)).as("cr"),
+        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct")))(
+      sum(col("ct")).as("nt"), sum(col("cr")).as("nr"))
     // null only on an EMPTY corpus, where the join emits no rows
     val nt = Option(m("nt")).fold(0L)(_.asInstanceOf[Long])
     val nr = Option(m("nr")).fold(0L)(_.asInstanceOf[Long])
@@ -405,12 +402,10 @@ object Scoring {
     // One per-doc-sliver checkpoint with the max riding it as an observe
     // metric (max over doubles is order-free exact — no summation);
     // w_max re-enters as a literal instead of a 1-row BroadcastExchange.
-    val obs = org.apache.spark.sql.Observation()
-    val w = dsirWeights(spark, dir, buckets)
-      .observe(obs, max(col("log_weight")).as("lw_max"))
-      .localCheckpoint(true)
+    val (w, m) = Materialize.withMetrics(dsirWeights(spark, dir, buckets))(
+      max(col("log_weight")).as("lw_max"))
     // null only on an EMPTY corpus, where the select emits no rows
-    val lwMax = Option(obs.get.apply("lw_max")).fold(0.0)(_.asInstanceOf[Double])
+    val lwMax = Option(m("lw_max")).fold(0.0)(_.asInstanceOf[Double])
     w
       // acceptance threshold t = w/w_max computed as round(exp(Δlogw), 6):
       // exp() is libm (1-ulp across engines), so the comparison runs on
@@ -560,7 +555,7 @@ object Scoring {
     // re-run the corpus-wide count shuffle.
     val cnt = big.groupBy(col("bgh"), col("uh"), col("wh"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     // c(u) = Σ types of u (occurrence count) and N1+(u,·) = type count
     // — one pass over the sliver for both u-margins
     val ustats = cnt.groupBy(col("uh"))

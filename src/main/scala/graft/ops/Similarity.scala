@@ -360,7 +360,7 @@ object Similarity {
       .select(col("q_id"), col("col._2").as("vec_id"),
         negate(col("col._1")).cast("long").as("approx_dist"),
         (col("pos") + 1).cast("int").as("rn"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     pairs.unpersist(false)
     out
   }
@@ -827,7 +827,7 @@ object Similarity {
         .agg(minByNd(col("nd"), col("cell")).as("cell"),
           first(col("c_ai")).as("c_ai"), first(col("c_n2")).as("c_n2"))
         .select(col("cell"), col("c_id"), col("c_ai"), col("c_n2"))
-        .localCheckpoint(true)
+        .transform(Materialize)
       members = fm.select(col("cell")).distinct()
         .join(parents, Seq("cell"))
         .select(col("cell").as("c_id"), col("cc_ai").as("c_ai"),
@@ -999,7 +999,7 @@ object Similarity {
         expr(dotExpr).cast("double") /
           (sqrt(col("a_n2").cast("double")) * sqrt(col("b_n2").cast("double"))))
       .select(col("a_id"), col("b_id"), col("cos"))
-      .localCheckpoint(true) // feeds the kNN build AND the final join
+      .transform(Materialize) // feeds the kNN build AND the final join
     val directed = scored.select(col("a_id").as("x"), col("b_id").as("y"), col("cos"))
       .unionByName(scored.select(col("b_id").as("x"), col("a_id").as("y"), col("cos")))
     val topk = udaf(new graft.functions.TopKAgg(k))
@@ -1068,7 +1068,7 @@ object Similarity {
   private def clusterPairs(assigned: DataFrame, cosT: Double): DataFrame = {
     val asg = assigned
       .withColumn("n2", expr("dot_long(ai, ai)"))
-      .localCheckpoint(true)
+      .transform(Materialize)
     val a = asg.select(col("cluster"), col("vec_id").as("a_id"),
       col("ai").as("a_ai"), col("n2").as("a_n2"))
     val b = asg.select(col("cluster"), col("vec_id").as("b_id"),

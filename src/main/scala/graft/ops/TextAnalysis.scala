@@ -85,15 +85,12 @@ object TextAnalysis {
     // the corpus total rides the sliver's materializing checkpoint as an
     // observe metric (r22, the literal-re-entry idiom; exact integer
     // sum) — no third margin agg + 1-row BroadcastExchange in the plan
-    val obs = org.apache.spark.sql.Observation()
-    val sl = Tables.documents(spark, dir)
-      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c"))
-      // the sliver feeds three margins — truncate so the corpus
-      // aggregation runs once
-      .observe(obs, sum(col("c")).as("n"))
-      .localCheckpoint(true)
+    // the sliver feeds three margins — truncate so the corpus
+    // aggregation runs once
+    val (sl, m) = Materialize.withMetrics(Tables.documents(spark, dir)
+      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c")))(sum(col("c")).as("n"))
     // null only on an EMPTY corpus, where the joins emit no rows anyway
-    val n = Option(obs.get.apply("n")).fold(1L)(_.asInstanceOf[Long])
+    val n = Option(m("n")).fold(1L)(_.asInstanceOf[Long])
     val s = sl.groupBy(col("source")).agg(sum(col("c")).as("ns"))
     val l = sl.groupBy(col("lang")).agg(sum(col("c")).as("nl"))
     sl.join(s, "source").join(broadcast(l), "lang")
@@ -836,7 +833,7 @@ object TextAnalysis {
     val wb = bitextBanded(w, r, nn, s)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = withBitextTuning(spark, n) {
-      bitextPlan(spark, wb, n, r, minCos, cap = capEff).localCheckpoint(true)
+      Materialize(bitextPlan(spark, wb, n, r, minCos, cap = capEff))
     }
     wb.unpersist(false)
     hv.unpersist(false)
@@ -929,16 +926,16 @@ object TextAnalysis {
     val joined = withBitextTuning(spark, n) {
       val banded = bitextPlan(spark, wbQ, n, r, minCos = -2.0, cap = capEff)
         .select(col("t_id"), col("en_id").as("band_en"), col("cos").as("band_cos"))
-        .localCheckpoint(true)
+        .transform(Materialize)
       val noCap = bitextPlan(spark, wbQ, n, r, minCos = -2.0, cap = Int.MaxValue)
         .select(col("t_id"), col("en_id").as("nocap_en"), col("cos").as("nocap_cos"))
-        .localCheckpoint(true)
+        .transform(Materialize)
       exact
         .join(banded, Seq("t_id"), "left")
         .join(noCap, Seq("t_id"), "left")
         .join(q.select(col("doc_id").as("t_id"), col("v").as("q_v"),
           col("n2").as("q_n2")), Seq("t_id"))
-        .localCheckpoint(true) // the exact brute leg runs ONCE, here
+        .transform(Materialize) // the exact brute leg runs ONCE, here
     }
     // Hit predicate, computed HERE so CurationOpsSpec's recall-floor
     // law and RecallProbe read the SAME `band_hit`/`nocap_hit` columns
@@ -955,7 +952,7 @@ object TextAnalysis {
     val needEn = joined.select(explode(array(col("band_en"),
       col("nocap_en"))).as("en_id")).filter(col("en_id").isNotNull).distinct()
     val enSliver = en.join(broadcast(needEn), Seq("en_id"), "left_semi")
-      .localCheckpoint(true) // ≤ 2·sampleN rows of answer vectors
+      .transform(Materialize) // ≤ 2·sampleN rows of answer vectors
     def withHit(df: DataFrame, enCol: String, hitCol: String): DataFrame =
       df.join(broadcast(enSliver.select(col("en_id").as(enCol),
         col("en_v").as("h_v"), col("en_n2").as("h_n2"))), Seq(enCol), "left")
@@ -969,7 +966,7 @@ object TextAnalysis {
       "nocap_en", "nocap_hit")
       .drop("q_v", "q_n2")
       .withColumn("cap_used", lit(capEff))
-      .localCheckpoint(true)
+      .transform(Materialize)
     wb.unpersist(false)
     hv.unpersist(false)
     out
@@ -1039,13 +1036,11 @@ object TextAnalysis {
     // explode FOUR separate times (cab/ca/cb/tot — 8 parquet scans in
     // the physical plan); N now rides the pair-table checkpoint as an
     // observe metric and the margins are sliver-sized re-aggregations.
-    val obs = org.apache.spark.sql.Observation()
-    val cab = pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
-      .observe(obs, sum(col("c_ab")).as("n"))
-      .localCheckpoint(true)
+    val (cab, m) = Materialize.withMetrics(
+      pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab")))(sum(col("c_ab")).as("n"))
     // null only on an EMPTY pair table, where the joins below emit no
     // rows for any literal — 1L keeps the division total
-    val nPairs = Option(obs.get.apply("n")).fold(1L)(_.asInstanceOf[Long])
+    val nPairs = Option(m("n")).fold(1L)(_.asInstanceOf[Long])
     val ca = cab.groupBy(col("a")).agg(sum(col("c_ab")).as("c_a"))
     val cb = cab.groupBy(col("b")).agg(sum(col("c_ab")).as("c_b"))
     val w = org.apache.spark.sql.expressions.Window

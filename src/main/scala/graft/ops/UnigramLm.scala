@@ -153,24 +153,24 @@ object UnigramLm {
   private def train(spark: SparkSession, dir: String,
                     rounds: Int): (DataFrame, DataFrame) = {
     require(rounds >= 0)
-    val w = words(spark, dir).localCheckpoint(true)
-    var vocab = withLp(seed(w)).localCheckpoint(true)
+    val w = Materialize(words(spark, dir))
+    var vocab = Materialize(withLp(seed(w)))
     // the coverage floor set: every corpus character (fixed across
     // rounds — chars never leave the vocabulary)
     val chars = vocab.filter(length(col("piece")) === 1)
-      .select(col("piece")).localCheckpoint(true)
+      .select(col("piece")).transform(Materialize)
     for (_ <- 1 to rounds) {
       val usage = viterbi(w, vocab)
         .select(col("cnt"), explode(col("pieces")).as("piece"))
         .groupBy(col("piece")).agg(sum(col("cnt")).as("u"))
-        .localCheckpoint(true)
+        .transform(Materialize)
       val next = chars.join(usage, Seq("piece"), "left")
         .select(col("piece"),
           greatest(coalesce(col("u"), lit(0L)), lit(1L)).as("c"))
         .unionByName(usage
           .filter(length(col("piece")) > 1)
           .select(col("piece"), col("u").as("c")))
-      vocab = withLp(next).localCheckpoint(true)
+      vocab = Materialize(withLp(next))
     }
     (vocab, w)
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.Tables
 import graft.etl.Upsert
+import graft.ops.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,7 +53,7 @@ object Sinks {
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_orders"),
         sum(graft.Tables.dec(col("o_totalprice"))).cast("double").as("sum_price"))
-      .localCheckpoint(true) // materialize before the tables drop
+      .transform(Materialize) // materialize before the tables drop
     spark.sql("DROP TABLE graft_q108_orders")
     spark.sql("DROP TABLE graft_q108_customer")
     out

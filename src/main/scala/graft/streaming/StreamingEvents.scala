@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -77,10 +78,10 @@ object StreamingEvents {
   /** Copy a memory-sink table out and DROP the temp view — each
     * invocation would otherwise pin a full result copy in driver memory
     * forever (the memory sink registers a per-query temp view that
-    * clearCache never touches). The localCheckpoint copy is GC'd with
+    * clearCache never touches). The materialized copy is GC'd with
     * the returned frame by the ContextCleaner. */
   private[streaming] def freeze(spark: SparkSession, name: String): DataFrame = {
-    val out = spark.table(name).localCheckpoint(true)
+    val out = Materialize(spark.table(name))
     spark.catalog.dropTempView(name)
     out
   }

@@ -40,17 +40,12 @@ class ClustersSpec extends SparkSpec {
   test("reliable checkpoint() path converges to the same components as localCheckpoint") {
     // the cluster-run configuration: lineage truncated through a real
     // checkpoint dir so a lost executor can reread, not recompute
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_cc").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
+    withCheckpointDir { _ =>
       val path = (1L until 33L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-      val (labels, rounds) = Clusters.connectedComponentsWithRounds(
-        path, checkpointer = _.checkpoint(true))
+      val (labels, rounds) = Clusters.connectedComponentsWithRounds(path)
       assert(rounds <= 8)
       val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == (1L to 33L).map(_ -> 1L).toMap)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
 

@@ -27,6 +27,30 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("eager checkpoints and Observation live only in ops/Materialize.scala") {
+    // one implementation of the checkpoint idiom: a forked copy would
+    // re-open the local-vs-reliable choice and the lazy-checkpoint hang
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no ${root.getAbsolutePath}: run from the repo root")
+    val forbidden = Seq(".localCheckpoint(", ".checkpoint(", "Observation(")
+    // the code part of a line: scaladoc/block-comment lines and trailing
+    // `//` comments are prose, not calls
+    def code(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("/*")) "" else t.split("//", 2)(0)
+    }
+    val hits = org.apache.commons.io.FileUtils.listFiles(root, Array("scala"), true)
+      .asScala.toSeq.filter(_.getName != "Materialize.scala").flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if forbidden.exists(code(line).contains) =>
+            s"${f.getPath}:${i + 1}: ${line.trim}"
+        }.toList finally src.close()
+      }
+    assert(hits.isEmpty, s"route these through graft.ops.Materialize:\n${hits.mkString("\n")}")
+  }
+
   test("entry produces rows (driver t1 smoke shape)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -49,19 +49,21 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pagerank through reliable checkpoint() matches the localCheckpoint path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_pr").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val edges = undirected(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)))
-      val local = Graph.rankTable(edges, iters = 7, damping = 0.85)
-        .collect().map(r => r.getAs[Long]("node") -> r.getAs[Double]("rank")).toMap
-      val reliable = Graph.rankTable(edges, iters = 7, damping = 0.85,
-          checkpointer = _.checkpoint(true))
-        .collect().map(r => r.getAs[Long]("node") -> r.getAs[Double]("rank")).toMap
-      assert(reliable == local, "checkpoint strategy must not change results")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    val edges = undirected(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)))
+    def ranks() = Graph.rankTable(edges, iters = 7, damping = 0.85)
+      .collect().map(r => r.getAs[Long]("node") -> r.getAs[Double]("rank")).toMap
+    val local = ranks()
+    val reliable = withCheckpointDir(_ => ranks())
+    assert(reliable == local, "checkpoint strategy must not change results")
+  }
+
+  test("q176 HITS through reliable checkpoint() matches the localCheckpoint path") {
+    // the heaviest withMetrics user: 8 snap rounds plus 2 read-outs
+    def rows() = Graph.hits(spark, sf).collect().map(_.toString).sorted.toSeq
+    val local = rows()
+    assert(local.length == 50)
+    assert(withCheckpointDir(_ => rows()) == local,
+      "checkpoint strategy must not change results")
   }
 
   test("q176 HITS matches a driver-side power iteration on the same edges") {

@@ -10,6 +10,21 @@ trait SparkSpec extends AnyFunSuite {
   /** Fast-loop scale factor for data-driven specs. */
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Runs `body` with a fresh checkpoint dir set on the shared session,
+    * so every `Materialize` in it takes the reliable-checkpoint path.
+    * The dir is unset afterwards — a dir left behind would switch every
+    * later suite in this JVM to reliable checkpoints too. */
+  def withCheckpointDir[T](body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    val out = try body(dir) finally {
+      spark.sparkContext.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "checkpoint dir leaked")
+    out
+  }
+
   /** Order-insensitive DataFrame equality on collected rows. */
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     val ca = a.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
